@@ -9,7 +9,8 @@ Semantics reproduced, scale bugs fixed:
 - quantile capping — ONE multi-column approxQuantile call instead of
   the reference's 11 sequential per-column jobs (:217-220);
 - capping clamp via least/greatest instead of a when-chain (:171-180);
-- StringIndexer → OneHotEncoder → VectorAssembler pipeline (:226-268);
+- StringIndexer → OneHotEncoder → VectorAssembler pipeline (:226-268),
+  as one multi-column stage each instead of a pair per column;
 - fit-state persistence as JSON + Spark ML pipeline save/load
   (:295-340).
 
@@ -75,25 +76,16 @@ def add_derived_features(df: DataFrame) -> DataFrame:
     """All derived columns as native expressions in one projection."""
     size_ok = F.col("size").isNotNull() & (F.col("size") > 0)
     land_ok = F.col("land_size").isNotNull() & (F.col("land_size") > 0)
-    return (
-        df.withColumn(
-            "distance_to_eiffel",
-            F.when(
-                F.col("approximate_latitude").isNotNull() & F.col("approximate_longitude").isNotNull(),
-                haversine_km(F.col("approximate_latitude"), F.col("approximate_longitude"), EIFFEL_LAT, EIFFEL_LON),
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "rooms_per_m2",
-            F.when(size_ok & F.col("nb_rooms").isNotNull(), F.col("nb_rooms") / F.col("size")).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "is_house",
-            F.when(F.col("property_type").isin("house", "villa", "maison"), 1.0).otherwise(0.0),
-        )
-        .withColumn("log_size", F.when(size_ok, F.log(F.col("size"))).otherwise(F.lit(0.0)))
-        .withColumn("log_land_size", F.when(land_ok, F.log(F.col("land_size"))).otherwise(F.lit(0.0)))
-    )
+    rooms_ok = size_ok & F.col("nb_rooms").isNotNull()
+    has_geo = F.col("approximate_latitude").isNotNull() & F.col("approximate_longitude").isNotNull()
+    eiffel_km = haversine_km(F.col("approximate_latitude"), F.col("approximate_longitude"), EIFFEL_LAT, EIFFEL_LON)
+    return df.withColumns({
+        "distance_to_eiffel": F.when(has_geo, eiffel_km).otherwise(F.lit(0.0)),
+        "rooms_per_m2": F.when(rooms_ok, F.col("nb_rooms") / F.col("size")).otherwise(F.lit(0.0)),
+        "is_house": F.when(F.col("property_type").isin("house", "villa", "maison"), 1.0).otherwise(0.0),
+        "log_size": F.when(size_ok, F.log(F.col("size"))).otherwise(F.lit(0.0)),
+        "log_land_size": F.when(land_ok, F.log(F.col("land_size"))).otherwise(F.lit(0.0)),
+    })
 
 
 def add_price_per_m2(df: DataFrame) -> DataFrame:
@@ -118,11 +110,9 @@ class FeatureEngineering:
 
     # -- imputation (reference :83-91) ------------------------------------
     def impute(self, df: DataFrame) -> DataFrame:
-        num_present = [c for c in NUMERIC_FEATURES if c in df.columns]
-        cat_present = [c for c in CATEGORICAL_FEATURES if c in df.columns]
-        return df.na.fill({c: _NUMERIC_FILL for c in num_present}).na.fill(
-            {c: _CATEGORICAL_FILL for c in cat_present}
-        )
+        fills = {c: _NUMERIC_FILL for c in NUMERIC_FEATURES if c in df.columns}
+        fills.update({c: _CATEGORICAL_FILL for c in CATEGORICAL_FEATURES if c in df.columns})
+        return df.na.fill(fills)
 
     # -- capping (reference :152-180; fixed to ONE quantile job) ----------
     def fit_capping(self, df: DataFrame, cols: list[str] | None = None) -> None:
@@ -132,33 +122,35 @@ class FeatureEngineering:
         self.capping_values = {c: (q[0], q[1]) for c, q in zip(cols, quantiles)}
 
     def apply_capping(self, df: DataFrame) -> DataFrame:
-        for c, (lo, hi) in self.capping_values.items():
-            if c in df.columns:
-                df = df.withColumn(c, F.least(F.greatest(F.col(c), F.lit(lo)), F.lit(hi)))
-        return df
+        return df.withColumns({
+            c: F.least(F.greatest(F.col(c), F.lit(lo)), F.lit(hi))
+            for c, (lo, hi) in self.capping_values.items()
+            if c in df.columns
+        })
 
     # -- encoder pipeline (reference :226-268) -----------------------------
     def _build_pipeline(self, df: DataFrame) -> Pipeline:
-        handle = "skip" if self.strict_mode else "keep"
+        """One multi-column indexer (one counting job at fit), one
+        multi-column encoder, one assembler: the same vectors as a pair
+        per column (labels by frequency, ties alphabetically, both ways)."""
         cats = [c for c in CATEGORICAL_FEATURES if c in df.columns]
-        stages = []
-        for c in cats:
-            stages.append(StringIndexer(inputCol=c, outputCol=f"{c}_indexed", handleInvalid=handle))
-            stages.append(
-                OneHotEncoder(
-                    inputCols=[f"{c}_indexed"],
-                    outputCols=[f"{c}_encoded"],
-                    dropLast=True,
-                    handleInvalid="error" if self.strict_mode else "keep",
-                )
-            )
+        indexed = [f"{c}_indexed" for c in cats]
+        encoded = [f"{c}_encoded" for c in cats]
         feature_cols = (
             [c for c in NUMERIC_FEATURES if c in df.columns]
             + [c for c in DERIVED_FEATURES if c in df.columns]
-            + [f"{c}_encoded" for c in cats]
+            + encoded
         )
-        stages.append(VectorAssembler(inputCols=feature_cols, outputCol="features", handleInvalid="keep"))
-        return Pipeline(stages=stages)
+        return Pipeline(stages=[
+            StringIndexer(inputCols=cats, outputCols=indexed, handleInvalid="skip" if self.strict_mode else "keep"),
+            OneHotEncoder(
+                inputCols=indexed,
+                outputCols=encoded,
+                dropLast=True,
+                handleInvalid="error" if self.strict_mode else "keep",
+            ),
+            VectorAssembler(inputCols=feature_cols, outputCol="features", handleInvalid="keep"),
+        ])
 
     def fit_transform(self, df: DataFrame) -> DataFrame:
         df = self.impute(df)

@@ -3,8 +3,8 @@ src/inference/predict.py:14-62, src/webapp/app.py:68-112).
 
 Composition: FeatureEngineering.transform (permissive mode) → model
 transform → smearing inverse → (id, predicted price). Single-row
-prediction reuses the exact same path via a 1-row DataFrame with the
-explicit 27-field schema — no separate code path to drift."""
+prediction runs the same plan over a 1-row driver-local frame
+(``listing_frame``) — no separate code path to drift."""
 
 from __future__ import annotations
 
@@ -33,6 +33,16 @@ def predict_batch(
     return out.select(F.col(id_col), F.col("prediction_price").alias("predicted_price"))
 
 
+def listing_frame(spark: SparkSession, record: dict) -> DataFrame:
+    """One listing (missing fields null) as a 1-row ``LocalRelation``. Arrow
+    casts each value to its field type only when lossless: JSON ``50`` is
+    50.0 for a double, ``2.5`` for an integer is an error."""
+    import pyarrow as pa
+
+    table = pa.Table.from_pylist([{f.name: record.get(f.name) for f in LISTINGS_SCHEMA.fields}])
+    return spark.createDataFrame(table, LISTINGS_SCHEMA)
+
+
 def predict_single(
     spark: SparkSession,
     record: dict,
@@ -42,6 +52,4 @@ def predict_single(
 ) -> DataFrame:
     """Single-row prediction through the batch path (reference:
     src/inference/predict.py:62 createDataFrame([dict], schema))."""
-    row = tuple(record.get(f.name) for f in LISTINGS_SCHEMA.fields)
-    df = spark.createDataFrame([row], LISTINGS_SCHEMA)
-    return predict_batch(df, fe, trainer, tt)
+    return predict_batch(listing_frame(spark, record), fe, trainer, tt)

@@ -13,10 +13,15 @@ module provides the same two operations behind:
   from any UI or notebook;
 - ``serve()`` — a zero-dependency ``http.server`` JSON API
   (GET /health, POST /predict, POST /predict_batch) for the
-  container-without-streamlit case. One request = one Spark job; the
-  SparkSession, fitted features, target stats and model are loaded
-  once per process, exactly like the reference's ``@st.cache_resource``
-  ``init_resources`` (app.py:28-45).
+  container-without-streamlit case. The SparkSession, fitted
+  features, target stats and model are loaded once per process, like
+  the reference's ``@st.cache_resource`` ``init_resources``
+  (app.py:28-45).
+
+A single request launches NO Spark job: its ``LocalRelation`` row
+(``predict.listing_frame``) lets Catalyst's ``ConvertToLocalRelation`` fold
+the whole batch plan into one driver-side ``LocalTableScan``. With that rule
+in ``spark.sql.optimizer.excludedRules`` each request runs a job instead.
 
 Fidelity notes vs the reference webapp:
 - the batch-mode data-quality report (app.py:74-101) ran ONE count()
@@ -34,11 +39,12 @@ import os
 import tempfile
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.ml.feature import StringIndexerModel
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from realestate_engine.features import FeatureEngineering
-from realestate_engine.predict import predict_batch
+from realestate_engine.features import _CATEGORICAL_FILL, FeatureEngineering
+from realestate_engine.predict import listing_frame, predict_batch
 from realestate_engine.target import TargetTransformer
 from realestate_engine.train import ModelTrainer
 
@@ -65,6 +71,7 @@ class PredictionService:
         self.fe = fe
         self.trainer = trainer
         self.tt = tt
+        self._clamps = self._clamp_exprs()
 
     @classmethod
     def load(cls, spark: SparkSession, artifact_dir: str) -> "PredictionService":
@@ -76,45 +83,35 @@ class PredictionService:
 
     # -- serve-time category clamp ---------------------------------------
 
-    def _clamp_unseen(self, df: DataFrame) -> DataFrame:
-        """Serve-time guard (round-6 fix): the fitted StringIndexers
-        carry handleInvalid='skip' from strict training, which silently
-        DROPS any request row holding an unseen category — a form
-        submission would vanish and .first() return None. Switching the
-        fitted stages to 'keep' is not an option either: it grows the
-        one-hot width past what the model was trained on. So clamp each
-        categorical to the fitted vocabulary instead — unseen or null
-        values map to the imputation fill if it was fitted, else the
-        most frequent label (index 0) — and every request yields a
-        prediction, which is the reference webapp's contract."""
-        from pyspark.ml.feature import StringIndexerModel
-
-        from realestate_engine.features import _CATEGORICAL_FILL
-
+    def _clamp_exprs(self) -> dict[str, Column]:
+        """Serve-time guard: 'skip' (strict training) would DROP a row with
+        an unseen category and 'keep' would widen the one-hot, so each
+        categorical is clamped to its fitted labels (unseen or null → the
+        imputation fill if fitted, else the most frequent label), read from
+        ``inputCols`` and older per-column ``inputCol`` indexers alike.
+        Clamped input is always in vocabulary, so 'skip' becomes 'error'
+        (same width): its row filter repeated every clamp and pushed the
+        batch stage's generated method past the JVM's 8000-byte JIT limit."""
         if self.fe.strict_mode or self.fe.pipeline_model is None:
-            return df
+            return {}
+        clamps = {}
         for stage in self.fe.pipeline_model.stages:
             if isinstance(stage, StringIndexerModel):
-                col = stage.getInputCol().removesuffix("_indexed")
-                if col not in df.columns:
-                    continue
-                labels = list(stage.labels)
-                fallback = _CATEGORICAL_FILL if _CATEGORICAL_FILL in labels else labels[0]
-                df = df.withColumn(
-                    col,
-                    F.when(F.col(col).isin(labels), F.col(col)).otherwise(F.lit(fallback)),
-                )
-        return df
+                if stage.getHandleInvalid() == "skip":
+                    stage.setHandleInvalid("error")
+                cols = stage.getInputCols() if stage.isSet(stage.inputCols) else [stage.getInputCol()]
+                for col, labels in zip(cols, stage.labelsArray):
+                    fallback = _CATEGORICAL_FILL if _CATEGORICAL_FILL in labels else labels[0]
+                    clamps[col] = F.when(F.col(col).isin(labels), F.col(col)).otherwise(F.lit(fallback))
+        return clamps
+
+    def _clamp_unseen(self, df: DataFrame) -> DataFrame:
+        return df.withColumns({c: e for c, e in self._clamps.items() if c in df.columns})
 
     # -- single prediction (app.py predict_single, :52-66) --------------
 
     def single(self, record: dict[str, Any]) -> dict[str, Any]:
-        from realestate_engine.schemas import LISTINGS_SCHEMA
-
-        row_df = self.spark.createDataFrame(
-            [tuple(record.get(f.name) for f in LISTINGS_SCHEMA.fields)], LISTINGS_SCHEMA
-        )
-        row = self.batch_df(row_df).first()
+        row = self.batch_df(listing_frame(self.spark, record)).first()
         if row is None:
             raise ValueError("prediction pipeline produced no row for this record")
         return {

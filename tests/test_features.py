@@ -133,11 +133,16 @@ def test_permissive_mode_keeps_unseen_categories(spark):
     assert fe.transform(_df(spark, unseen)).count() == 1  # kept, not dropped
 
 
-def test_capping_is_single_job_and_clamps(spark):
+def test_capping_is_single_job_and_clamps(spark, count_jobs):
     rows = [_listing(id_annonce=i, size=float(i)) for i in range(1, 101)]
     fe = FeatureEngineering()
     df = fe.impute(add_derived_features(_df(spark, rows)))
-    fe.fit_capping(df, ["size"])
+    # one aggregate query whatever the column count, not one per column;
+    # adaptive execution runs its shuffle map stage as a job of its own
+    one, _ = count_jobs(lambda: fe.fit_capping(df, ["size"]))
+    jobs, _ = count_jobs(lambda: fe.fit_capping(df, CAPPED_COLUMNS))
+    assert jobs == one == (2 if spark.conf.get("spark.sql.adaptive.enabled") == "true" else 1)
+    assert set(fe.capping_values) == set(CAPPED_COLUMNS)
     lo, hi = fe.capping_values["size"]
     capped = fe.apply_capping(df)
     mn, mx = capped.agg({"size": "min"}).first()[0], capped.agg({"size": "max"}).first()[0]

@@ -11,10 +11,12 @@ import urllib.request
 
 import pytest
 
+from pyspark.ml import Pipeline
+from pyspark.ml.feature import OneHotEncoder, StringIndexer
 from pyspark.sql import functions as F
 
-from realestate_engine.features import FeatureEngineering
-from realestate_engine.predict import predict_batch
+from realestate_engine.features import CATEGORICAL_FEATURES, FeatureEngineering, add_derived_features
+from realestate_engine.predict import listing_frame, predict_batch
 from realestate_engine.schemas import LISTINGS_SCHEMA
 from realestate_engine.serving import PredictionService, serve
 from realestate_engine.target import TargetTransformer
@@ -86,7 +88,106 @@ def test_single_matches_batch_path(service):
         x.filter(F.col("id_annonce") == 3), svc.fe, svc.trainer, svc.tt
     ).first()
     assert got["id_annonce"] == 3
-    assert got["predicted_price"] == pytest.approx(round(direct["predicted_price"], 2))
+    assert got["predicted_price"] == round(direct["predicted_price"], 2)
+    # the unrounded price of the driver-local plan is the executors' price
+    unrounded = svc.batch_df(listing_frame(svc.spark, rec)).first()["predicted_price"]
+    assert unrounded == direct["predicted_price"]
+
+
+def test_single_runs_no_spark_job(service, count_jobs):
+    """A request is answered on the driver: the 1-row input is a
+    LocalRelation and ConvertToLocalRelation folds the whole prediction
+    plan into one LocalTableScan, which collects without a job."""
+    svc, x = service
+    rec = x.filter(F.col("id_annonce") == 5).first().asDict()
+    jobs, got = count_jobs(lambda: svc.single(rec))
+    assert jobs == 0
+    assert got["id_annonce"] == 5 and got["predicted_price"] > 0
+    plan = svc.batch_df(listing_frame(svc.spark, rec))._jdf.queryExecution().executedPlan()
+    assert plan.nodeName() == "LocalTableScan"
+
+
+def test_batch_plan_methods_stay_jit_compilable(service):
+    """HotSpot never JIT-compiles a method over 8000 bytes of bytecode.
+    The serve-time batch plan is one whole-stage-codegen stage; with the
+    indexer's row filter repeating every category clamp it crossed that
+    limit and batch scoring ran at half speed."""
+    svc, x = service
+    plan = svc.batch_df(x)._jdf.queryExecution().executedPlan()
+    stages = svc.spark._jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(plan)
+    sizes = [stages.apply(i)._3().maxMethodCodeSize() for i in range(stages.size())]
+    assert sizes and max(sizes) < 8000
+
+
+def _strict_fe(svc, x, nine_stages: bool) -> FeatureEngineering:
+    """A strict fit on the service's training listings: the 3-stage
+    encoder, or the layout artifacts were saved with before it — a
+    StringIndexer and a OneHotEncoder per categorical column, then the
+    same assembler."""
+    fe = FeatureEngineering(strict_mode=True)
+    fe.capping_values = dict(svc.fe.capping_values)
+    train = fe.apply_capping(add_derived_features(fe.impute(x)))
+    pipeline = fe._build_pipeline(train)
+    if nine_stages:
+        stages = []
+        for c in CATEGORICAL_FEATURES:
+            stages += [
+                StringIndexer(inputCol=c, outputCol=f"{c}_indexed", handleInvalid="skip"),
+                OneHotEncoder(
+                    inputCols=[f"{c}_indexed"], outputCols=[f"{c}_encoded"], dropLast=True, handleInvalid="error"
+                ),
+            ]
+        pipeline = Pipeline(stages=stages + pipeline.getStages()[-1:])
+    fe.pipeline_model = pipeline.fit(train)
+    return fe
+
+
+def _unseen(x):
+    """Known listings plus three whose categories the fit never saw
+    (an unseen label, a null, both at once)."""
+    base = x.filter(F.col("id_annonce") < 3)
+    odd = base.withColumns({
+        "id_annonce": F.col("id_annonce") + 1000,
+        "property_type": F.when(F.col("id_annonce") != 1, F.lit("chateau")),
+        "exposition": F.when(F.col("id_annonce") != 0, F.lit(None).cast("string")).otherwise("north"),
+    })
+    return base.unionByName(odd)
+
+
+def test_three_stage_encoder_equals_nine_stage_layout(service):
+    """Every category in the fixture is tied in frequency (75 rows
+    each), so both layouts must break ties the same way; both skip the
+    rows holding an unseen or null category."""
+    svc, x = service
+    new, old = _strict_fe(svc, x, nine_stages=False), _strict_fe(svc, x, nine_stages=True)
+    assert len(new.pipeline_model.stages) == 3 and len(old.pipeline_model.stages) == 9
+    scored = _unseen(x).unionByName(x.filter(F.col("id_annonce") >= 3))
+
+    def features(fe):
+        return {r["id_annonce"]: r["features"].toArray().tolist() for r in fe.transform(scored).collect()}
+
+    new_features = features(new)
+    assert new_features == features(old)
+    assert sorted(new_features) == list(range(300))
+
+    def prices(fe):
+        return {r["id_annonce"]: r["predicted_price"] for r in predict_batch(scored, fe, svc.trainer, svc.tt).collect()}
+
+    assert prices(new) == prices(old)
+
+
+def test_service_loads_nine_stage_artifacts(service, tmp_path):
+    """Artifacts saved with one indexer per column still load, clamp
+    unseen and null categories, and answer exactly as the 3-stage fit."""
+    svc, x = service
+    _strict_fe(svc, x, nine_stages=True).save(str(tmp_path / "fe"))
+    svc.tt.save(str(tmp_path / "tt.json"))
+    svc.trainer.save(str(tmp_path / "model"))
+    old = PredictionService.load(svc.spark, str(tmp_path))
+    assert set(old._clamps) == set(CATEGORICAL_FEATURES)
+    for row in _unseen(x).collect():
+        rec = row.asDict()
+        assert old.single(rec) == svc.single(rec)
 
 
 def test_batch_audit_single_pass(service):
@@ -132,6 +233,19 @@ def test_http_api_end_to_end(service, tmp_path):
         assert len(batch["predictions"]) == 20
         assert {p["id_annonce"] for p in batch["predictions"]} == set(range(20))
         assert all(p["predicted_price"] > 0 for p in batch["predictions"])
+
+        # the form's JS serialises 50.0 as 50: a whole number for a
+        # double field is the same listing; a fraction for an integer
+        # field is refused instead of truncated
+        def post(**over) -> dict:
+            body = json.dumps({**rec, **over}).encode()
+            with urllib.request.urlopen(urllib.request.Request(f"{base}/predict", data=body), timeout=120) as r:
+                return json.load(r)
+
+        assert post(size=50, land_size=0) == post(size=50.0, land_size=0.0)
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            post(nb_rooms=2.5)
+        assert ei.value.code == 400
 
         # malformed request → HTTP 400, server stays alive
         bad = urllib.request.Request(f"{base}/predict", data=b"not json")
